@@ -13,7 +13,7 @@ absence: the whole petk/ tree); declared in SURVEY §2.F.
 
 Algorithm: iterative min-label propagation. Each round every node
 takes the min label among itself and its neighbors — one equi-join of
-the label frame with the (bidirectional) edge list plus one min-agg,
+the label frame with the bidirectional edge list plus one min-agg,
 i.e. two hash shuffles on ``id`` per round, map-side combined, no
 driver data movement (the driver loop only checks a convergence COUNT
 per round). Rounds needed = graph diameter; near-dup components are
@@ -26,7 +26,11 @@ variant (Kiveris et al., "Connected Components in MapReduce and
 Beyond", SoCC'14; ``algorithm="star"``), which converges in O(log n)
 rounds independent of diameter with the same join+min-agg building
 blocks — the 100 TB path when the pair graph isn't the dense near-dup
-shape. Equivalence of the two fixpoints is property-tested.
+shape. Equivalence of the two fixpoints is property-tested. Each edge
+row explodes into both directions, so the lazy pair frame is scanned
+ONCE: under AQE an exchange above a persisted relation (the pair
+operators' cached shingle frame) is never reused, so a second consumer
+would re-run the whole pair plan.
 
 Determinism: labels are ids, min() is order-insensitive, iteration
 count is data-dependent but the fixpoint is unique — the result is
@@ -82,15 +86,11 @@ def connected_components(
         F.col(id_col).cast("long").alias("id"),
         F.col(id_col).cast("long").alias("lbl"),
     )
-    both = edges.select(
-        F.col(src_col).cast("long").alias("u"), F.col(dst_col).cast("long").alias("v")
-    ).unionByName(
-        edges.select(
-            F.col(dst_col).cast("long").alias("u"),
-            F.col(src_col).cast("long").alias("v"),
-        )
-    )
-    both = both.localCheckpoint(eager=False)
+    src, dst = F.col(src_col).cast("long"), F.col(dst_col).cast("long")
+    both = edges.select(F.explode(F.array(
+        F.struct(src.alias("u"), dst.alias("v")),
+        F.struct(dst.alias("u"), src.alias("v")),
+    )).alias("e")).select("e.u", "e.v").localCheckpoint(eager=False)
 
     changed = 0
     for _ in range(max_iterations):

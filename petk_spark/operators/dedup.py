@@ -303,11 +303,14 @@ def minhash_signatures(
     """(id, sig: array<bigint>) — k minhash values per document. One
     explode + one groupBy; the k mins are k aggregate expressions over
     the per-shingle base hash."""
-    sh = shingle_frame(df, id_col, text_col, n)
+    return _signature_frame(shingle_frame(df, id_col, text_col, n), k).select("id", "sig")
+
+
+def _signature_frame(sh: DataFrame, k: int) -> DataFrame:
+    """(id, n_sh, sig): k minhash values and the shingle count, one groupBy."""
     hx = sh.select("id", shingle_hash_expr(F.col("shingle")).alias("hx"))
-    agg = hx.groupBy("id").agg(*_min_sig_exprs(k))
-    return agg.select(
-        "id", F.array(*[F.col(f"h{i}") for i in range(k)]).alias("sig")
+    return hx.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"), *_min_sig_exprs(k)).select(
+        "id", "n_sh", F.array(*[F.col(f"h{i}") for i in range(k)]).alias("sig")
     )
 
 
@@ -342,18 +345,17 @@ def minhash_lsh_near_dup(
 
     # The shingle frame feeds BOTH signature generation and exact
     # verification. It is the expensive subtree (pandas-UDF tokenize +
-    # explode over every document), and Catalyst does not share
-    # un-exchanged subtrees across plan branches — so persist it once
-    # and let both consumers read the cached blocks. MEMORY_AND_DISK:
-    # spills instead of recomputing, evictable under pressure.
+    # explode over every document), so persist it once (MEMORY_AND_DISK:
+    # spills instead of recomputing). Under AQE an exchange above a
+    # persisted relation is never reused — each consumer re-runs its
+    # shuffle — so consumers must not be duplicated: the shingle count
+    # n_sh (a function of id) rides the bucket rows into each candidate
+    # pair instead of a per-id size aggregate joined back.
     sh = shingle_frame(df, id_col, text_col, n)
     if persist and verify_exact and not df.isStreaming:
         sh = sh.persist()
 
-    hx = sh.select("id", shingle_hash_expr(F.col("shingle")).alias("hx"))
-    sig = hx.groupBy("id").agg(*_min_sig_exprs(k)).select(
-        "id", F.array(*[F.col(f"h{i}") for i in range(k)]).alias("sig")
-    )
+    sig = _signature_frame(sh, k)
 
     # Band bucket = the r signature values joined as a string. A plain
     # concat key (not a hash of it) keeps the bucket engine-portable;
@@ -369,8 +371,8 @@ def minhash_lsh_near_dup(
             for b in range(bands)
         ]
     )
-    buckets = sig.select("id", F.explode(band_entries).alias("e")).select(
-        "id", "e.band", "e.bucket"
+    buckets = sig.select("id", "n_sh", F.explode(band_entries).alias("e")).select(
+        "id", "n_sh", "e.band", "e.bucket"
     )
 
     a = buckets.alias("a")
@@ -378,26 +380,24 @@ def minhash_lsh_near_dup(
     cand = (
         a.join(b_, ["band", "bucket"])
         .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+                F.col("a.n_sh").alias("sh_a"), F.col("b.n_sh").alias("sh_b"))
         .distinct()
     )
     if not verify_exact:
-        return cand
+        return cand.select("id_a", "id_b")
 
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     # Count common shingles via join on (shingle) scoped to candidate pairs.
     sh_a = sh.select(F.col("id").alias("id_a"), "shingle")
     sh_b = sh.select(F.col("id").alias("id_b"), "shingle")
     n_common = (
         cand.join(sh_a, "id_a")
         .join(sh_b, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
+        .groupBy("id_a", "id_b", "sh_a", "sh_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    out = (
-        n_common.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "sh_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "sh_b"), "id_b")
-        .withColumn(
+    return (
+        n_common.withColumn(
             "jaccard",
             F.col("n_common")
             / (F.col("sh_a") + F.col("sh_b") - F.col("n_common")).cast("double"),
@@ -405,7 +405,6 @@ def minhash_lsh_near_dup(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -988,7 +988,9 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
 
     The split estimate uses file metadata only (``inputFiles`` + stat):
     an ``df.rdd.getNumPartitions()`` probe forces full physical planning
-    through py4j — measured ~2 s of driver time per describe call."""
+    through py4j — measured ~2 s of driver time per describe call. A
+    non-``file:`` input (s3a://, hdfs://, ...) returns ``df`` unchanged:
+    its sizes are unknown without a filesystem client."""
     import os
     from urllib.parse import unquote, urlparse
 
@@ -1007,13 +1009,11 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
         for f in files:
             u = urlparse(f)
             if u.scheme not in ("", "file"):
-                # remote FS — sizes unknown without an FS client; pay the
-                # planning probe (negligible next to a cluster-scale scan)
-                splits = df.rdd.getNumPartitions()
-                break
+                # remote FS — sizes unknown without an FS client, and a
+                # planning probe costs what this guard exists to avoid
+                return df
             total += os.stat(unquote(u.path)).st_size
-        else:
-            splits = max(1, -(-total // max_pb))
+        splits = max(1, -(-total // max_pb))
         if splits * 2 <= target:
             return df.repartition(target)
     except Exception:  # pragma: no cover - heuristic is advisory

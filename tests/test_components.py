@@ -35,6 +35,96 @@ def test_singletons_and_two_components(spark):
     assert got[5] == got[6] == 5
 
 
+def test_edge_frame_is_evaluated_once(spark):
+    """Both edge directions come from ONE scan of the edge frame: a
+    counting UDF in the edge plan sees each edge row exactly once (a
+    union of two projections evaluates it twice). Labels match the hand
+    closure on a graph with a self-loop, a duplicate edge and a
+    singleton."""
+    from pyspark.sql.types import LongType
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def count(x):
+        seen.add(1)
+        return x
+
+    edge_rows = [(1, 2), (2, 3), (2, 3), (4, 4), (6, 5)]
+    edges = spark.createDataFrame(edge_rows, "a long, b long").select(
+        F.udf(count, LongType())("a").alias("id_a"), F.col("b").alias("id_b")
+    )
+    nodes = spark.createDataFrame([(i,) for i in range(8)], "id long")
+    got = {r.id: r.cluster_id for r in connected_components(nodes, edges).collect()}
+    assert seen.value == len(edge_rows)
+    assert got == {0: 0, 1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5, 7: 7}
+
+
+def test_observation_get_returns_after_eager_local_checkpoint(spark):
+    """The label loop reads its convergence count from an Observation
+    published by the eager localCheckpoint's job. Run on a worker
+    thread joined with a timeout, so a Spark change that stops
+    publishing it fails this test instead of hanging the suite."""
+    import threading
+
+    from pyspark.sql import Observation
+
+    out = {}
+
+    def run():
+        try:
+            obs = Observation()
+            spark.range(10).observe(
+                obs, F.count(F.lit(1)).alias("n")
+            ).localCheckpoint(eager=True)
+            out["n"] = obs.get["n"]
+        except Exception as e:  # surfaced by the assert below
+            out["error"] = e
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout=120)
+    assert not t.is_alive(), "Observation.get blocked after localCheckpoint"
+    assert out == {"n": 10}
+
+
+#: Spark jobs one near_dup_clusters call over the MinHash pairs of the
+#: corpus below may launch (local[4], 8 shuffle partitions, AQE on). A
+#: doubled subplan — e.g. the pair plan read once per edge direction, or
+#: a second consumer of the cached shingle frame — goes well above it.
+NEAR_DUP_CLUSTERS_MAX_JOBS = 24
+
+
+def test_near_dup_clusters_job_ceiling(spark):
+    from petk_spark.operators.components import near_dup_clusters
+    from petk_spark.operators.dedup import minhash_lsh_near_dup
+
+    base = "a stitch in time saves nine said the tailor to the apprentice"
+    rows = [(100 + i, f"{base} w{i % 3}") for i in range(6)]
+    rows += [(200 + i, f"one two three four five six seven eight v{i % 2}")
+             for i in range(4)]
+    rows += [(300, "nothing alike here at all"), (301, None)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    sc = spark.sparkContext
+    group = "test-near-dup-clusters-jobs"
+    sc.setJobGroup(group, "near_dup_clusters job ceiling")
+    try:
+        got = near_dup_clusters(
+            docs, minhash_lsh_near_dup(docs, "doc_id", "text", threshold=0.5),
+            "doc_id",
+        ).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    labels = {r.id: r.cluster_id for r in got}
+    assert labels == {
+        **{100 + i: 100 for i in range(6)},
+        **{200 + i: 200 for i in range(4)},
+        300: 300, 301: 301,
+    }
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= NEAR_DUP_CLUSTERS_MAX_JOBS, n_jobs
+
+
 def test_keep_first_keeps_one_per_component(spark):
     df = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(8)], "doc_id long, text string"

@@ -465,3 +465,59 @@ def test_filter_previously_seen(spark):
     # schema passthrough: original columns, no helper columns
     out = filter_previously_seen(new, "id", "text", seen)
     assert out.columns == ["id", "text"]
+
+
+def test_minhash_pairs_match_sizes_join_formula(spark):
+    """minhash_lsh_near_dup carries each document's shingle count on its
+    signature and bucket rows. Pairs and jaccard must equal the formula
+    that joins a per-id size aggregate back onto the candidate pairs,
+    on a corpus with a duplicated doc_id, a NULL text and a document
+    shorter than n tokens; and the plan must drop that aggregate's
+    exchanges and the two join-backs' id shuffles."""
+    from pyspark.sql import functions as F
+
+    from petk_spark.operators.dedup import minhash_lsh_near_dup, shingle_frame
+    from petk_spark.plans.inspect import exchange_count
+
+    base = "every good boy deserves fudge and the quick fox jumps over it"
+    rows = [(i, f"{base} t{i % 3}") for i in range(5)]
+    rows += [(2, f"{base} extra tail"),          # duplicated doc_id
+             (7, None), (8, "two words"), (9, "two words"),
+             (10, "a completely unrelated document about rivers and hills")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    threshold = 0.5
+
+    def sizes_join_formula():
+        sh = shingle_frame(df, "doc_id", "text", 3)
+        cand = minhash_lsh_near_dup(df, "doc_id", "text", threshold=threshold,
+                                    verify_exact=False)
+        sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
+        n_common = (
+            cand.join(sh.select(F.col("id").alias("id_a"), "shingle"), "id_a")
+            .join(sh.select(F.col("id").alias("id_b"), "shingle"),
+                  ["id_b", "shingle"])
+            .groupBy("id_a", "id_b")
+            .agg(F.count(F.lit(1)).alias("n_common"))
+        )
+        return (
+            n_common.join(sizes.toDF("id_a", "sh_a"), "id_a")
+            .join(sizes.toDF("id_b", "sh_b"), "id_b")
+            .withColumn("jaccard", F.col("n_common") / (
+                F.col("sh_a") + F.col("sh_b") - F.col("n_common")).cast("double"))
+            .filter(F.col("jaccard") >= threshold)
+            .select("id_a", "id_b", "jaccard")
+        )
+
+    new = minhash_lsh_near_dup(df, "doc_id", "text", threshold=threshold)
+    old = sizes_join_formula()
+    # Both plans measured before either runs: the size aggregate (one
+    # per join-back) and the join-backs' two id_a / id_b shuffles.
+    assert exchange_count(new) == exchange_count(old) - 4
+
+    def pairs(frame):
+        return sorted((r.id_a, r.id_b, r.jaccard.hex()) for r in frame.collect())
+
+    got = pairs(new)
+    assert got == pairs(old)
+    ids = {i for p in got for i in p[:2]}
+    assert {0, 1, 2, 3, 4} <= ids and not ids & {7, 8, 9, 10}

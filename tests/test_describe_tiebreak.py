@@ -63,14 +63,16 @@ def test_far_future_timestamps_stay_distinct(spark):
 
 def test_double_fast_path_nan_null_zero(spark):
     # Doubles group on the normalized double itself: one NaN class,
-    # nulls excluded, zeros counted; quantiles/min/max unchanged.
+    # -0.0 and 0.0 one value (as in DuckDB), nulls excluded, zeros
+    # counted; quantiles/min/max unchanged.
     df = spark.createDataFrame(
-        [(0.0,), (1.5,), (1.5,), (float("nan"),), (float("nan"),), (None,)],
+        [(0.0,), (-0.0,), (1.5,), (1.5,), (float("nan"),), (float("nan"),),
+         (None,)],
         "v double",
     )
     assert _stat(df, "v", "distinct_count") == 3  # 0.0, 1.5, NaN
-    assert _stat(df, "v", "count") == 5
-    assert _stat(df, "v", "n_zeros") == 1
+    assert _stat(df, "v", "count") == 6
+    assert _stat(df, "v", "n_zeros") == 2
 
 
 def test_rank_strategies_agree_on_gated_types(spark):

@@ -242,3 +242,36 @@ def test_topn_queries_use_bounded_take_ordered(spark):
         plan = executed_plan(plan_df)
         assert "TakeOrderedAndProject" in plan, plan[:800]
         assert "Sort " not in plan, "global sort leaked into a top-n plan"
+
+
+def test_ensure_parallelism_runs_no_planning_probe_on_remote_fs():
+    """For a non-file: input the split count is unknown without a
+    filesystem client; ensure_parallelism must return the frame as is
+    rather than pay the ~2 s df.rdd.getNumPartitions() planning probe."""
+    from types import SimpleNamespace
+
+    from petk_spark.operators.describe import ensure_parallelism
+
+    probes = []
+
+    class RemoteFrame:
+        sparkSession = SimpleNamespace(
+            sparkContext=SimpleNamespace(defaultParallelism=32),
+            conf=SimpleNamespace(get=lambda key, default=None: default),
+        )
+
+        def inputFiles(self):
+            return ["s3a://bucket/warehouse/docs/part-00000.parquet"]
+
+        @property
+        def rdd(self):
+            probes.append("rdd")
+            raise AssertionError("planning probe on a remote input")
+
+        def repartition(self, n):
+            probes.append("repartition")
+            raise AssertionError("repartition of a remote input")
+
+    df = RemoteFrame()
+    assert ensure_parallelism(df) is df
+    assert probes == []
